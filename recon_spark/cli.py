@@ -61,10 +61,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--manifest", default=None, metavar="PATH",
         help="write a run-manifest JSON (per-stage row counts, validity "
-        "tallies, action mix) collected via df.observe — no extra jobs. "
-        "Disables the global output sort (its range-sampling pass would "
-        "double-count upstream metrics); files are sorted within "
-        "partitions instead.",
+        "tallies, action mix) collected via df.observe — no extra jobs.",
     )
     return p
 
@@ -159,6 +156,7 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         matched = ira_rollover.run_ira_rollover_analysis(matrix, date_filter=date_filter)
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     engine_metrics = (
@@ -177,12 +175,18 @@ def main(argv: list[str] | None = None) -> int:
         ):
             print(f"Figure spec written to: {p_}")
     matched = obs(matched, "engine_output", **engine_metrics)
-    if mf:
-        # the D4 global sort's range-sampling pass would re-execute every
-        # stage above the last shuffle and double all observed counts;
-        # keep files readable via a within-partition sort instead
-        corrections = build_correction_df(matched, sort=False).sortWithinPartitions(
-            "Matrix Account", "Participant SSN", "Transaction Date"
+    # Build the corrections over a PERSISTED engine output. The cached
+    # relation is a leaf to the optimizer, so the correction filter cannot
+    # be pushed down through the engine's rule projections — pushed down,
+    # it inlines and re-derives every rule inside the predicate, multiplying
+    # plan size and task binaries. The cache also fires every upstream
+    # observation exactly once, under the D4 sort's range-sampling pass.
+    matched = matched.persist()
+    try:
+        # the total rides the one sink write: no count job
+        counted = Observation()
+        corrections = build_correction_df(matched).observe(
+            counted, F.count(F.lit(1)).alias("n")
         )
         corrections = obs(
             corrections,
@@ -190,12 +194,10 @@ def main(argv: list[str] | None = None) -> int:
             n_update_1099=F.sum((F.col("Action") == "UPDATE_1099").cast("long")),
             n_investigate=F.sum((F.col("Action") == "INVESTIGATE").cast("long")),
         )
-    else:
-        corrections = build_correction_df(matched)
-    # cache: the count action and the partitioned write both consume it
-    corrections = corrections.persist()
-    total = corrections.count()
-    path = write_correction_file(corrections, args.out, fmt=args.format)
+        path = write_correction_file(corrections, args.out, fmt=args.format)
+        total = counted.get["n"]
+    finally:
+        matched.unpersist()
 
     print(f"Corrections written to: {path}")
     print(f"Total corrections: {total}")

@@ -116,12 +116,13 @@ def run_roth_taxable_analysis(
     df = df.join(demo, ["plan_id", "ssn"], "left")
     df = df.join(basis, ["plan_id", "ssn"], "left")
 
-    # Expensive shared subexpressions (regex code normalization, add_months
-    # age attainment, start-year coalesce) are materialized ONCE as helper
-    # columns and referenced by name below. Leaving them as Column variables
-    # inlines a full copy of the tree at every use site — the reason/action
-    # builders alone reference them ~40x, which blew the logical plan into
-    # multi-MiB task binaries and dominated optimizer + codegen time.
+    # Every shared subexpression and every rule mask is materialized ONCE
+    # as a named helper column (``__*``) and referenced by name, in layered
+    # ``withColumns`` batches: a batch reads only columns of earlier batches.
+    # A Column variable would inline its whole tree at each use site — the
+    # action/reason/suggestion builders reference the masks ~40x — and the
+    # optimizer keeps a multiply-referenced non-trivial alias in its own
+    # Project, so the names survive optimization as one evaluation each.
     df = df.withColumns({
         "txn_year": F.year("txn_date").cast("long"),
         "term_year": F.year("term_date").cast("long"),
@@ -150,168 +151,193 @@ def run_roth_taxable_analysis(
         ).over(w),
     })
 
-    first_year_valid = (
-        F.col("first_roth_tax_year").isNotNull()
-        & (F.col("first_roth_tax_year") > 0)
-        & F.col("first_roth_tax_year").between(VALID_YEAR_MIN, VALID_YEAR_MAX)
-    )
+    code1, code2 = F.col("__code1"), F.col("__code2")
     start_year = F.col("__start_year")
-    start_year_valid = (
-        start_year.isNotNull() & (start_year > 0) & start_year.between(VALID_YEAR_MIN, VALID_YEAR_MAX)
-    )
-    df = df.withColumn("start_roth_year", F.when(start_year_valid, start_year))
+    att_59_5 = F.col("__att_59_5")
+    att_55_txn = F.col("__att_55_txn")
+    att_55_term = F.col("__att_55_term")
+    has_term = F.col("term_year").isNotNull()
 
-    code1 = F.col("__code1")
-    code2 = F.col("__code2")
-    engine_excluded = code1.isin(EXCLUDED_CODES_TAXCODE)
-    locked = (code1 == ROTH_ROLLOVER_CODE) | ((code1 == ROTH_CODE) & (code2 == DEATH_CODE))
+    df = df.withColumns({
+        "__excluded": code1.isin(EXCLUDED_CODES_TAXCODE),
+        "__locked": (code1 == ROTH_ROLLOVER_CODE) | ((code1 == ROTH_CODE) & (code2 == DEATH_CODE)),
+        "__first_year_valid": (
+            F.col("first_roth_tax_year").isNotNull()
+            & (F.col("first_roth_tax_year") > 0)
+            & F.col("first_roth_tax_year").between(VALID_YEAR_MIN, VALID_YEAR_MAX)
+        ),
+        "__start_year_valid": (
+            start_year.isNotNull()
+            & (start_year > 0)
+            & start_year.between(VALID_YEAR_MIN, VALID_YEAR_MAX)
+        ),
+    })
+    engine_excluded = F.col("__excluded")
     active = ~engine_excluded
+    first_year_valid = F.col("__first_year_valid")
+    start_year_valid = F.col("__start_year_valid")
 
-    # Roth tax-code fix rules (reference :197-240); mutually exclusive masks
-    fix_b_g = (code1 == ROTH_CODE) & (code2 == ROLLOVER_CODE) & active
-    fix_g_4 = (code1 == ROLLOVER_CODE) & (code2 == DEATH_CODE) & active
-    fix_4_blank = (code1 == DEATH_CODE) & (code2 == "") & active
-    fix_blank_4 = (code2 == DEATH_CODE) & (code1 == "") & active
-    fix_g_blank = (code1 == ROLLOVER_CODE) & (code2 == "") & active
-    fix_blank_g = (code1 == "") & (code2 == ROLLOVER_CODE) & active
-    taxcode_override = fix_b_g | fix_g_4 | fix_4_blank | fix_blank_4 | fix_g_blank | fix_blank_g
+    # Roth tax-code fix rules (reference :197-240); mutually exclusive masks,
+    # plus the taxable / basis / year rules (reference :241-313)
+    df = df.withColumns({
+        "__fix_b_g": (code1 == ROTH_CODE) & (code2 == ROLLOVER_CODE) & active,
+        "__fix_g_4": (code1 == ROLLOVER_CODE) & (code2 == DEATH_CODE) & active,
+        "__fix_4_blank": (code1 == DEATH_CODE) & (code2 == "") & active,
+        "__fix_blank_4": (code2 == DEATH_CODE) & (code1 == "") & active,
+        "__fix_g_blank": (code1 == ROLLOVER_CODE) & (code2 == "") & active,
+        "__fix_blank_g": (code1 == "") & (code2 == ROLLOVER_CODE) & active,
+        "__basis_mask": (
+            active
+            & F.col("roth_basis_amt").isNotNull()
+            & F.col("gross_2025_total").isNotNull()
+            & (F.col("roth_basis_amt") >= F.col("gross_2025_total"))
+        ),
+        "__raw_qualified": (
+            active
+            & F.col("__att_qualified")
+            & start_year_valid
+            & F.coalesce(
+                (F.col("txn_year") - start_year) >= QUALIFIED_YEARS_SINCE_FIRST, F.lit(False)
+            )
+        ),
+        "__year_change_required": (
+            active
+            & first_year_valid
+            & (
+                F.col("roth_initial_contribution_year").isNull()
+                | (F.col("roth_initial_contribution_year") != F.col("first_roth_tax_year"))
+            )
+        ),
+        "__missing_first_year": active & ~first_year_valid,
+        "__proximity": (
+            active
+            & F.coalesce(F.col("fed_taxable_amt") > 0, F.lit(False))
+            & F.coalesce(
+                F.col("gross_amt") <= F.col("fed_taxable_amt") * (1 + TAXABLE_PROXIMITY_PCT),
+                F.lit(False),
+            )
+        ),
+        "start_roth_year": F.when(start_year_valid, start_year),
+    })
+    fix_b_g, fix_g_4 = F.col("__fix_b_g"), F.col("__fix_g_4")
+    fix_4_blank, fix_blank_4 = F.col("__fix_4_blank"), F.col("__fix_blank_4")
+    fix_g_blank, fix_blank_g = F.col("__fix_g_blank"), F.col("__fix_blank_g")
+    basis_mask, raw_qualified = F.col("__basis_mask"), F.col("__raw_qualified")
+    year_change_required = F.col("__year_change_required")
+    missing_first_year = F.col("__missing_first_year")
+    proximity = F.col("__proximity")
+
+    df = df.withColumns({
+        "__taxcode_override": (
+            fix_b_g | fix_g_4 | fix_4_blank | fix_blank_4 | fix_g_blank | fix_blank_g
+        ),
+        "suggested_taxable_amt": F.when(basis_mask | raw_qualified, F.lit(0.0)),
+        "suggested_first_roth_tax_year": F.when(
+            year_change_required, F.col("first_roth_tax_year").cast("long")
+        ),
+    })
+    taxcode_override = F.col("__taxcode_override")
+    taxable_suggested = active & F.col("suggested_taxable_amt").isNotNull()
+
+    # Roth age-based expectations (reference :315-357)
+    df = df.withColumns({
+        "__age_applicable": (
+            active
+            & ~taxcode_override
+            & ~F.col("__locked")
+            & F.col("dob").isNotNull()
+            & F.col("txn_year").isNotNull()
+        ),
+        "__taxable_missing_current": taxable_suggested & F.col("fed_taxable_amt").isNull(),
+        "__taxable_change_required": (
+            taxable_suggested
+            & F.col("fed_taxable_amt").isNotNull()
+            & (F.abs(F.col("fed_taxable_amt") - F.col("suggested_taxable_amt")) > 0.01)
+        ),
+    })
+    age_applicable = F.col("__age_applicable")
+    taxable_missing_current = F.col("__taxable_missing_current")
+    taxable_change_required = F.col("__taxable_change_required")
+
+    age_normal = age_applicable & att_59_5
+    under_normal = age_applicable & ~age_normal
+    df = df.withColumn(
+        "__expected_code2",
+        F.when(age_normal, "7")
+        .when(under_normal & has_term & att_55_term, "2")
+        .when(under_normal & has_term & ~att_55_term, "1")
+        .when(under_normal & ~has_term & ~att_55_txn, "1")
+        .when(under_normal & ~has_term & att_55_txn, "2"),
+    )
+    expected_code2 = F.col("__expected_code2")
+    df = df.withColumn(
+        "__age_mismatch",
+        age_applicable
+        & (
+            (code1 != ROTH_CODE)
+            | (expected_code2.isNotNull() & (code2 != F.coalesce(expected_code2, F.lit(""))))
+        ),
+    )
+    age_mismatch = F.col("__age_mismatch")
+    age_rule = age_mismatch & expected_code2.isNotNull()
 
     fix_suggested_1 = (
         F.when(fix_b_g | fix_g_blank | fix_blank_g | fix_g_4, ROTH_ROLLOVER_CODE)
         .when(fix_4_blank | fix_blank_4, ROTH_CODE)
     )
     fix_suggested_2 = F.when(fix_g_4 | fix_4_blank | fix_blank_4, DEATH_CODE)
-
-    # taxable / basis / year logic
-    basis_mask = (
-        active
-        & F.col("roth_basis_amt").isNotNull()
-        & F.col("gross_2025_total").isNotNull()
-        & (F.col("roth_basis_amt") >= F.col("gross_2025_total"))
-    )
-
-    att_59_5 = F.col("__att_59_5")
-    att_qualified = F.col("__att_qualified")
-    att_55_txn = F.col("__att_55_txn")
-    att_55_term = F.col("__att_55_term")
-
-    raw_qualified = (
-        active
-        & att_qualified
-        & start_year_valid
-        & F.coalesce(
-            (F.col("txn_year") - start_year) >= QUALIFIED_YEARS_SINCE_FIRST, F.lit(False)
-        )
-    )
-    suggested_taxable = F.when(basis_mask | raw_qualified, F.lit(0.0))
-    df = df.withColumn("suggested_taxable_amt", suggested_taxable)
-
-    taxable_suggested = active & F.col("suggested_taxable_amt").isNotNull()
-    taxable_missing_current = taxable_suggested & F.col("fed_taxable_amt").isNull()
-    taxable_change_required = (
-        taxable_suggested
-        & F.col("fed_taxable_amt").isNotNull()
-        & (F.abs(F.col("fed_taxable_amt") - F.col("suggested_taxable_amt")) > 0.01)
-    )
-    year_change_required = (
-        active
-        & first_year_valid
-        & (
-            F.col("roth_initial_contribution_year").isNull()
-            | (F.col("roth_initial_contribution_year") != F.col("first_roth_tax_year"))
-        )
-    )
-    missing_first_year = active & ~first_year_valid
-    proximity = (
-        active
-        & F.coalesce(F.col("fed_taxable_amt") > 0, F.lit(False))
-        & F.coalesce(
-            F.col("gross_amt") <= F.col("fed_taxable_amt") * (1 + TAXABLE_PROXIMITY_PCT),
-            F.lit(False),
-        )
-    )
-    df = df.withColumn(
-        "suggested_first_roth_tax_year",
-        F.when(year_change_required, F.col("first_roth_tax_year").cast("long")),
-    )
-
-    # Roth age-based expectations (reference :315-357)
-    has_term = F.col("term_year").isNotNull()
-    age_applicable = (
-        active & ~taxcode_override & ~locked & F.col("dob").isNotNull() & F.col("txn_year").isNotNull()
-    )
-    age_normal = age_applicable & att_59_5
-    under_normal = age_applicable & ~age_normal
-    term_55_plus = under_normal & has_term & att_55_term
-    term_under_55 = under_normal & has_term & ~att_55_term
-    dist_under_55 = under_normal & ~has_term & ~att_55_txn
-    dist_55_plus = under_normal & ~has_term & att_55_txn
-
-    expected_code2 = (
-        F.when(age_normal, "7")
-        .when(term_55_plus, "2")
-        .when(term_under_55, "1")
-        .when(dist_under_55, "1")
-        .when(dist_55_plus, "2")
-    )
-    age_mismatch = age_applicable & (
-        (code1 != ROTH_CODE)
-        | (expected_code2.isNotNull() & (code2 != F.coalesce(expected_code2, F.lit(""))))
-    )
-
-    suggested_1 = F.when(taxcode_override, fix_suggested_1).when(age_mismatch, ROTH_CODE)
-    suggested_2 = F.when(taxcode_override, fix_suggested_2).otherwise(
-        F.when(age_mismatch & expected_code2.isNotNull(), expected_code2)
-    )
-    df = df.withColumns({"suggested_tax_code_1": suggested_1, "suggested_tax_code_2": suggested_2})
-
-    # ordered action tokens; the tax-code fix rules append UPDATE_1099
-    # first (reference :204-231), then :301-313 and :358 in source order
-    actions = N.conditional_tokens(
-        (taxcode_override, ACTION_UPDATE),
-        (year_change_required, ACTION_UPDATE),
-        (taxable_missing_current, ACTION_INVESTIGATE),
-        (missing_first_year, ACTION_INVESTIGATE),
-        (taxable_change_required, ACTION_UPDATE),
-        (proximity, ACTION_INVESTIGATE),
-        (age_mismatch, ACTION_UPDATE),
-    )
-    df = df.withColumn("__actions", actions)
-
-    # ordered reason tokens (reference :205-230 fixes, then :361-393)
-    reasons = N.conditional_tokens(
-        (fix_b_g, "roth_rollover_code_fix_B_G_to_H"),
-        (fix_g_4, "roth_rollover_code_fix_G_4_to_H_4"),
-        (fix_4_blank, "roth_death_code_fix_4_to_B_4"),
-        (fix_blank_4, "roth_death_code_fix_blank_4_to_B_4"),
-        (fix_g_blank, "roth_rollover_code_fix_G_blank_to_H"),
-        (fix_blank_g, "roth_rollover_code_fix_blank_G_to_H"),
-        (year_change_required, "roth_initial_year_mismatch"),
-        (missing_first_year, "missing_first_roth_tax_year"),
-        (basis_mask, "roth_basis_covers_2025_total"),
-        (raw_qualified, "qualified_roth_distribution"),
-        (taxable_missing_current, "missing_fed_taxable_amt"),
-        (proximity, "taxable_within_15pct_of_gross"),
-        (age_mismatch, "roth_age_tax_code_mismatch"),
-        (age_mismatch & expected_code2.isNotNull() & att_59_5, "roth_age_rule_attained_59_5_in_txn_year_expect_B7"),
-        (
-            age_mismatch & expected_code2.isNotNull() & ~att_59_5 & has_term & att_55_term,
-            "roth_age_rule_attained_55_in_term_year_expect_B2",
+    df = df.withColumns({
+        "suggested_tax_code_1": F.when(taxcode_override, fix_suggested_1).when(
+            age_mismatch, ROTH_CODE
         ),
-        (
-            age_mismatch & expected_code2.isNotNull() & ~att_59_5 & has_term & ~att_55_term,
-            "roth_age_rule_under_55_in_term_year_expect_B1",
+        "suggested_tax_code_2": F.when(taxcode_override, fix_suggested_2).otherwise(
+            F.when(age_rule, expected_code2)
         ),
-        (
-            age_mismatch & expected_code2.isNotNull() & ~att_59_5 & ~has_term & att_55_txn,
-            "roth_age_rule_attained_55_in_txn_year_no_term_expect_B2",
+        # ordered action tokens; the tax-code fix rules append UPDATE_1099
+        # first (reference :204-231), then :301-313 and :358 in source order
+        "__actions": N.conditional_tokens(
+            (taxcode_override, ACTION_UPDATE),
+            (year_change_required, ACTION_UPDATE),
+            (taxable_missing_current, ACTION_INVESTIGATE),
+            (missing_first_year, ACTION_INVESTIGATE),
+            (taxable_change_required, ACTION_UPDATE),
+            (proximity, ACTION_INVESTIGATE),
+            (age_mismatch, ACTION_UPDATE),
         ),
-        (
-            age_mismatch & expected_code2.isNotNull() & ~att_59_5 & ~has_term & ~att_55_txn,
-            "roth_age_rule_under_55_in_txn_year_no_term_expect_B1",
+        # ordered reason tokens (reference :205-230 fixes, then :361-393)
+        "__reasons": N.conditional_tokens(
+            (fix_b_g, "roth_rollover_code_fix_B_G_to_H"),
+            (fix_g_4, "roth_rollover_code_fix_G_4_to_H_4"),
+            (fix_4_blank, "roth_death_code_fix_4_to_B_4"),
+            (fix_blank_4, "roth_death_code_fix_blank_4_to_B_4"),
+            (fix_g_blank, "roth_rollover_code_fix_G_blank_to_H"),
+            (fix_blank_g, "roth_rollover_code_fix_blank_G_to_H"),
+            (year_change_required, "roth_initial_year_mismatch"),
+            (missing_first_year, "missing_first_roth_tax_year"),
+            (basis_mask, "roth_basis_covers_2025_total"),
+            (raw_qualified, "qualified_roth_distribution"),
+            (taxable_missing_current, "missing_fed_taxable_amt"),
+            (proximity, "taxable_within_15pct_of_gross"),
+            (age_mismatch, "roth_age_tax_code_mismatch"),
+            (age_rule & att_59_5, "roth_age_rule_attained_59_5_in_txn_year_expect_B7"),
+            (
+                age_rule & ~att_59_5 & has_term & att_55_term,
+                "roth_age_rule_attained_55_in_term_year_expect_B2",
+            ),
+            (
+                age_rule & ~att_59_5 & has_term & ~att_55_term,
+                "roth_age_rule_under_55_in_term_year_expect_B1",
+            ),
+            (
+                age_rule & ~att_59_5 & ~has_term & att_55_txn,
+                "roth_age_rule_attained_55_in_txn_year_no_term_expect_B2",
+            ),
+            (
+                age_rule & ~att_59_5 & ~has_term & ~att_55_txn,
+                "roth_age_rule_under_55_in_txn_year_no_term_expect_B1",
+            ),
         ),
-    )
-    df = df.withColumn("__reasons", reasons)
+    })
 
     has_update = F.array_contains(F.col("__actions"), ACTION_UPDATE)
     has_investigate = F.array_contains(F.col("__actions"), ACTION_INVESTIGATE)

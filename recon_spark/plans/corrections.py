@@ -6,12 +6,17 @@ Reference: /root/reference/src/outputs/build_correction_file.py:125-305
 split). The Spark rendering is a composed boolean filter + projection —
 one narrow scan-shaped stage, no shuffle until the optional output sort.
 
-100 TB notes: the selection masks are plain predicates (pushed toward the
-engine output's storage if materialized); the action-tab split is two
-filtered writes sharing one upstream plan (Spark caches nothing — at
-scale, materialize the corrections frame once, or use
-``partitionBy("Action")`` via :func:`recon_spark.sources.sinks.
-write_correction_file` so a single pass writes both tabs).
+Rule: build the corrections over a PERSISTED (or written) engine output.
+The selection filter sits above the engine's rule projections, and the
+optimizer pushes a filter through a projection by inlining the projected
+expressions — over a lazy engine output it re-derives every rule inside
+the predicate, and the plan (and every task binary) grows several-fold.
+A cached relation is a leaf the filter cannot cross, so each rule is
+evaluated once, when the cache is built (``recon_spark.cli`` persists its
+engine output for this reason; the registry reads materialized engine
+outputs). The action-tab split then needs no second pass either:
+:func:`recon_spark.sources.sinks.write_correction_file` writes both tabs
+as one ``partitionBy`` write.
 """
 
 from __future__ import annotations
@@ -55,13 +60,15 @@ def build_correction_df(
     """F11 + P3: select actionable rows and project to the correction
     template (build_correction_file.py:125-305).
 
-    ``sort=False`` drops the D4 presentation sort: a global ``orderBy``
-    is a range-partitioned exchange whose partitioner SAMPLES the child
-    plan first, re-executing everything above the previous shuffle — at
-    deliverable (.xlsx) scale that is fine, but an instrumented or
-    100 TB write should skip it (Observation metrics above the last
-    exchange double-count under the sampling pass, and the sort itself
-    is presentational)."""
+    ``sort=False`` drops the D4 presentation sort, for callers that sort
+    later themselves (one ``orderBy`` over a union of engines). A global
+    ``orderBy`` is a range-partitioned exchange whose partitioner SAMPLES
+    its child first, re-executing everything down to the previous shuffle
+    or cache. Over a persisted engine output (see the module docstring)
+    that child is a cache scan plus this filter and projection, so the
+    sampling pass is cheap and observations below the cache fire once;
+    over a lazy engine output it re-runs the engine and double-counts
+    any observation on the way."""
     cols = set(matches.columns)
 
     needs = F.col("match_status").isin("match_needs_correction", "match_needs_review")
